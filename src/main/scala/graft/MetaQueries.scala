@@ -48,22 +48,16 @@ object MetaQueries {
   private def perJvmRoot(prefix: String): String = {
     val dir = java.nio.file.Files.createTempDirectory(prefix)
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      deleteRecursively(dir.toFile)))
+      graft.sink.SnapshotTable.deleteTree(dir.toFile)))
     dir.toString
   }
 
   /** Scratch warehouse, wiped per query invocation (commits are real). */
   private[graft] def freshWarehouse(key: String): String = {
     val dir = new File(s"$scratchRoot/$key")
-    deleteRecursively(dir)
+    graft.sink.SnapshotTable.deleteTree(dir)
     dir.mkdirs()
     dir.toString
-  }
-
-  /** The one recursive tree delete every scratch/warm path shares. */
-  private def deleteRecursively(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(deleteRecursively)
-    f.delete(): Unit
   }
 
   /** Session cache of WARM stream-fixture bases: the immutable prelude
@@ -93,7 +87,7 @@ object MetaQueries {
         // rebuilding on top would corrupt the fixture for the rest of
         // the JVM (path-exists write failures, doubled commits). The
         // root is per-JVM, so the wipe can never race another process.
-        deleteRecursively(dir)
+        graft.sink.SnapshotTable.deleteTree(dir)
         dir.mkdirs()
         build(dir.toString)
         dir.toString

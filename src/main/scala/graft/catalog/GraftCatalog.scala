@@ -302,11 +302,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val t = tableOf(ident)
     if (!t.exists) return false
     checkTeamAccess(ident.name, t.fullName, "alter")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(t.root))
+    graft.sink.SnapshotTable.deleteTree(new java.io.File(t.root))
     true
   }
 
@@ -658,10 +654,9 @@ final class GraftSparkTable(
         .filter(_.positional)
       posDels
         .map { d =>
-          spark.read
-            .format(d.format.getOrElse(
-              snapTable.currentSnapshot.map(_.format).getOrElse("parquet")))
-            .load(d.dir)
+          graft.sink.SnapshotTable.loadDir(spark,
+              d.format.getOrElse(snapTable.currentSnapshot.map(_.format).getOrElse("parquet")),
+              d.dir)
             .select(
               col(graft.sink.SnapshotTable.RowIdFileCol).as("file_path"),
               col(graft.sink.SnapshotTable.RowIdPosCol).as("pos"),
@@ -1037,12 +1032,7 @@ final class GraftStagedTable(
           val foreign = t.snapshots.exists(_.id != id)
           if (foreign) t.discardStaged(id)
           else {
-            def rm(f: java.io.File): Unit = {
-              if (f.isDirectory)
-                Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rm)
-              f.delete(): Unit
-            }
-            rm(new java.io.File(t.root))
+            graft.sink.SnapshotTable.deleteTree(new java.io.File(t.root))
           }
         }
       }

@@ -627,13 +627,8 @@ object GraftMaterializedView {
   }
 
   /** Remove a storage table's directory tree (create-rollback + drop). */
-  private def deleteTableDir(t: graft.sink.SnapshotTable): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(t.root))
-  }
+  private def deleteTableDir(t: graft.sink.SnapshotTable): Unit =
+    graft.sink.SnapshotTable.deleteTree(new java.io.File(t.root))
 
   private def mvSidecar(wh: String, ns: String, name: String): GraftViewStore.StoredView = {
     val sv = GraftViewStore.read(wh, Identifier.of(Array(ns), name)).getOrElse(

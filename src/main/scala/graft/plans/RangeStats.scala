@@ -151,7 +151,7 @@ object RangeStats {
     * `observe` and never re-reads.
     */
   def writeSidecar(spark: SparkSession, dataDir: String, format: String, rows: Long): Unit = {
-    val df = spark.read.format(format).load(dataDir)
+    val df = graft.sink.SnapshotTable.loadDir(spark, format, dataDir)
     val fields = df.schema.fields.toSeq
     val entries: Seq[(String, ColRange)] =
       if (fields.isEmpty || rows == 0L) fields.map(f => f.name -> ColRange(0L, None, None))

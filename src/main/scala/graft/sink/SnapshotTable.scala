@@ -6,6 +6,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.governance.Audit
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet-mode snapshot table: the Iceberg-semantics subset the engine
   * needs when no Iceberg catalog is available (this image carries no
@@ -173,9 +174,29 @@ final case class PublishConflictException(table: String, snapshotId: Long)
     s"Cannot publish staged snapshot $snapshotId of $table: the published head " +
       "advanced since it was staged; discard and restage on the current head")
 
+/** One snapshot table under `root`.
+  *
+  * Data dirs are write-once. Every writer takes a fresh dir from
+  * [[newDir]] and fills it with one `mode("overwrite").save`, or with a
+  * link tree for carried and imported files; nothing writes data into
+  * an existing dir, and later writes beside the data are dot-file
+  * sidecars, which Spark does not read as data. So a dir's data files,
+  * and the schema Spark infers for them, never change once its writer
+  * returns: [[SnapshotTable.loadDir]] infers each dir's schema once and
+  * reuses it. The engine removes dirs only through
+  * [[SnapshotTable.deleteTree]], which forgets their schemas.
+  */
 final class SnapshotTable(val root: String, val fullName: String) {
 
   private def metadataPath = Paths.get(root, "metadata.json")
+
+  /** A fresh write-once data dir under the root:
+    * `snap-<prefix><8 hex><suffix>` (prefix `del-`/`posdel-` for delete
+    * files, suffix `-carry`/`-added` for link trees). A random name per
+    * writer, so two optimistic writers never share a path.
+    */
+  private def newDir(prefix: String = "", suffix: String = ""): String =
+    Paths.get(root, s"snap-$prefix${java.util.UUID.randomUUID().toString.take(8)}$suffix").toString
 
   def exists: Boolean = Files.exists(metadataPath)
 
@@ -239,7 +260,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
           // same sidecar content => same physical (id, name, type)
           // triples and same layout, so one mapping serves the group and
           // multi-root partition discovery sees consistent structures
-          projectTo(spark.read.format(snap.format).load(dirs: _*),
+          projectTo(SnapshotTable.loadDir(spark, snap.format, dirs: _*),
             snap.cols, dirColumnMapping(dirs.head, snap.cols))
       }.reduce(_ unionByName _)
   }
@@ -296,7 +317,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     // in scope (or the caller probes for one): dirs without them pay
     // zero metadata-column cost
     val needRowId = keepRowId || posDels.nonEmpty
-    val base0 = spark.read.format(snap.format).load(d)
+    val base0 = SnapshotTable.loadDir(spark, snap.format, d)
     val base =
       if (!needRowId) base0
       else base0.select(col("*"),
@@ -319,7 +340,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     // delete file scoped to this dir on (file_path, row_index) —
     // physical row identity, no key semantics
     val afterPos = posDels.foldLeft(projected) { (df, del) =>
-      df.join(broadcast(spark.read.format(del.format.getOrElse(snap.format)).load(del.dir)),
+      df.join(broadcast(SnapshotTable.loadDir(spark, del.format.getOrElse(snap.format), del.dir)),
         Seq(SnapshotTable.RowIdFileCol, SnapshotTable.RowIdPosCol), "left_anti")
     }
     val cleaned =
@@ -332,7 +353,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     // Delete keys are delete-time column names; renaming an active
     // delete's key column is rejected, so they match current names.
     eqDels.foldLeft(cleaned) { (df, del) =>
-      df.join(broadcast(spark.read.format(del.format.getOrElse(snap.format)).load(del.dir)),
+      df.join(broadcast(SnapshotTable.loadDir(spark, del.format.getOrElse(snap.format), del.dir)),
         del.keys, "left_anti")
     }
   }
@@ -396,8 +417,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
       s"delete keys frame must carry ${keyCols.mkString(", ")} (has: ${keys.columns.mkString(", ")})")
     val spark = keys.sparkSession
     val base = requireCurrent
-    val delDir = Paths.get(root,
-      s"snap-del-${java.util.UUID.randomUUID().toString.take(8)}").toString
+    val delDir = newDir(prefix = "del-")
     val keyRows = keys.select(keyCols.map(org.apache.spark.sql.functions.col): _*).distinct()
     keyRows.write.mode("overwrite").format(base.format).save(delDir)
 
@@ -414,7 +434,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
           // head's format — a conflict can move `cur` to a head whose
           // format differs (rival overwrite), but the file's bytes don't
           .join(org.apache.spark.sql.functions.broadcast(
-            spark.read.format(base.format).load(delDir)), keyCols, "left_semi")
+            SnapshotTable.loadDir(spark, base.format, delDir)), keyCols, "left_semi")
           .count()
       val total = if (cur.rowCount < 0 || removed < 0) -1L else cur.rowCount - removed
       SnapshotTable.beforeSwapHook(this, attempt)
@@ -442,7 +462,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
         case Right(snap) => return snap
         case Left(conflict) =>
           if (attempt >= numRetries) {
-            deleteRecursively(new File(delDir))
+            SnapshotTable.deleteTree(new File(delDir))
             throw CommitFailedException(fullName, attempt + 1, conflict)
           }
           Thread.sleep(SnapshotTable.backoffMs(attempt))
@@ -510,13 +530,12 @@ final class SnapshotTable(val root: String, val fullName: String) {
       // pass over the table just to count, and the delete scopes to
       // exactly the dirs holding matched files, so every other dir
       // keeps the zero-metadata-cost read path
-      val delDir = Paths.get(root,
-        s"snap-posdel-${java.util.UUID.randomUUID().toString.take(8)}").toString
+      val delDir = newDir(prefix = "posdel-")
       matches.write.mode("overwrite").format(cur.format).save(delDir)
-      val delFile = spark.read.format(cur.format).load(delDir)
+      val delFile = SnapshotTable.loadDir(spark, cur.format, delDir)
       val removed = delFile.count()
       if (removed == 0L) {
-        deleteRecursively(new File(delDir))
+        SnapshotTable.deleteTree(new File(delDir))
         return cur
       }
       val hitDirs = delFile.select(SnapshotTable.RowIdDirCol)
@@ -553,7 +572,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
       res match {
         case Right(snap) => return snap
         case Left(conflict) =>
-          deleteRecursively(new File(delDir))
+          SnapshotTable.deleteTree(new File(delDir))
           if (attempt >= numRetries)
             throw CommitFailedException(fullName, attempt + 1, conflict)
           Thread.sleep(SnapshotTable.backoffMs(attempt))
@@ -585,10 +604,9 @@ final class SnapshotTable(val root: String, val fullName: String) {
       val (pos, eq) = cur.deletes.partition(_.positional)
       if (pos.size < 2) return cur
       val union = pos.map(d =>
-          spark.read.format(d.format.getOrElse(cur.format)).load(d.dir))
+          SnapshotTable.loadDir(spark, d.format.getOrElse(cur.format), d.dir))
         .reduce(_ unionByName _).distinct()
-      val delDir = Paths.get(root,
-        s"snap-posdel-${java.util.UUID.randomUUID().toString.take(8)}").toString
+      val delDir = newDir(prefix = "posdel-")
       union.write.mode("overwrite").format(cur.format).save(delDir)
       val applies = pos.flatMap(_.applies).distinct.filter(cur.dataDirs.contains)
       SnapshotTable.beforeSwapHook(this, attempt)
@@ -615,7 +633,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
       res match {
         case Right(snap) => return snap
         case Left(conflict) =>
-          deleteRecursively(new File(delDir))
+          SnapshotTable.deleteTree(new File(delDir))
           if (attempt >= numRetries)
             throw CommitFailedException(fullName, attempt + 1, conflict)
           Thread.sleep(SnapshotTable.backoffMs(attempt))
@@ -680,13 +698,12 @@ final class SnapshotTable(val root: String, val fullName: String) {
       // write the positions file first, count + scope from the (tiny)
       // file — the table-sized probe runs twice total (positions write,
       // updated-rows write), never a third time for a count
-      val delDir = Paths.get(root,
-        s"snap-posdel-${java.util.UUID.randomUUID().toString.take(8)}").toString
+      val delDir = newDir(prefix = "posdel-")
       positions.write.mode("overwrite").format(cur.format).save(delDir)
-      val delFile = spark.read.format(cur.format).load(delDir)
+      val delFile = SnapshotTable.loadDir(spark, cur.format, delDir)
       val removed = delFile.count()
       if (removed == 0L) {
-        deleteRecursively(new File(delDir))
+        SnapshotTable.deleteTree(new File(delDir))
         return cur
       }
       val hitDirs = delFile.select(SnapshotTable.RowIdDirCol)
@@ -710,7 +727,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
           // the commit cleaned up its own data dir; the delete file is
           // ours to reclaim. Re-probe from the moved head — positions
           // are only valid against the snapshot they were probed from.
-          deleteRecursively(new File(delDir))
+          SnapshotTable.deleteTree(new File(delDir))
           if (attempt >= numRetries) throw e
           Thread.sleep(SnapshotTable.backoffMs(attempt))
           attempt += 1
@@ -1344,17 +1361,16 @@ final class SnapshotTable(val root: String, val fullName: String) {
       // over the table just to count
       val delInfo: Option[(String, Long, Seq[String])] = touched.flatMap {
         case (positions, _) =>
-          val dd = Paths.get(root,
-            s"snap-posdel-${java.util.UUID.randomUUID().toString.take(8)}").toString
+          val dd = newDir(prefix = "posdel-")
           positions.write.mode("overwrite").format(cur.format).save(dd)
           // one job over the (tiny) positions file yields BOTH the
           // removed count and the hit-dir set (formerly a count job
           // plus a distinct+collect job)
-          val hits = spark.read.format(cur.format).load(dd)
+          val hits = SnapshotTable.loadDir(spark, cur.format, dd)
             .groupBy(col(SnapshotTable.RowIdDirCol)).count().collect()
           val removed = hits.map(_.getLong(1)).sum
           if (removed == 0L) {
-            deleteRecursively(new File(dd)); None
+            SnapshotTable.deleteTree(new File(dd)); None
           } else {
             val hit = hits.map(_.getString(0)).toSet
             Some((dd, removed, cur.dataDirs.filter(hit.contains)))
@@ -1378,7 +1394,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
           posDelete = delInfo)
       catch {
         case e: CommitFailedException =>
-          delInfo.foreach(d => deleteRecursively(new File(d._1)))
+          delInfo.foreach(d => SnapshotTable.deleteTree(new File(d._1)))
           if (attempt >= numRetries) throw e
           Thread.sleep(SnapshotTable.backoffMs(attempt))
           attempt += 1
@@ -1462,7 +1478,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
       if (clean.isEmpty) Map.empty
       else {
         val probe = clean.map { d =>
-          val base = spark.read.format(snap.format).load(d)
+          val base = SnapshotTable.loadDir(spark, snap.format, d)
             .withColumn(dirCol, lit(d))
             .withColumn(fileCol, input_file_name())
           projectTo(base, snap.cols, dirColumnMapping(d, snap.cols),
@@ -1485,8 +1501,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
         (readDir(spark, snap, d), None)
       else {
         val carried = all.filterNot(hits.contains)
-        val carryDir = Paths.get(root,
-          s"snap-${java.util.UUID.randomUUID().toString.take(8)}-carry").toString
+        val carryDir = newDir(suffix = "-carry")
         val dBase = new File(d).toPath
         carried.foreach { f =>
           val src = Paths.get(f)
@@ -1530,8 +1545,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
         // the rewrite reads ONLY the affected files; basePath keeps the
         // hive partition columns resolving exactly as a dir read would
         val hit = all.filter(hits.contains)
-        val narrow = spark.read.format(snap.format)
-          .option("basePath", d).load(hit: _*)
+        val narrow = SnapshotTable.loadDirFiles(spark, snap.format, d, hit)
         (projectTo(narrow, snap.cols, dirColumnMapping(d, snap.cols)),
           Some(carryDir))
       }
@@ -1564,8 +1578,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
       // the rewrite; cleaned up with the data dir on a lost CAS
       carryDirs: Seq[String] = Nil): Either[CommitConflictException, Snapshot] = {
     val pCols = partitionColumns
-    val dataDir = Paths.get(root,
-      s"snap-${java.util.UUID.randomUUID().toString.take(8)}").toString
+    val dataDir = newDir()
     val clustered0 =
       if (pCols.nonEmpty)
         replacement.repartition(pCols.map(org.apache.spark.sql.functions.col): _*)
@@ -1593,7 +1606,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
       try obs.get catch { case scala.util.control.NonFatal(_) => Map.empty }
     val newRows = metrics.get("__rows") match {
       case Some(l: Long) => l
-      case _ => spark.read.format(base.format).load(dataDir).count()
+      case _ => SnapshotTable.loadDir(spark, base.format, dataDir).count()
     }
     val (rowsByPart, partBounds) = partitionJobStats(spark, dataDir, pCols, base.format)
     writePartitionSidecar(dataDir, pCols, rowsByPart, newRows, base.format)
@@ -1619,8 +1632,8 @@ final class SnapshotTable(val root: String, val fullName: String) {
       val prev = snapshots
       val head = prev.filterNot(_.staged).lastOption
       if (head.map(_.id) != Some(base.id)) {
-        deleteRecursively(new File(dataDir))
-        carryDirs.foreach(c => deleteRecursively(new File(c)))
+        SnapshotTable.deleteTree(new File(dataDir))
+        carryDirs.foreach(c => SnapshotTable.deleteTree(new File(c)))
         Left(CommitConflictException(fullName, Some(base.id), head.map(_.id)))
       } else {
         val id = prev.map(_.id).maxOption.getOrElse(0L) + 1
@@ -1676,14 +1689,14 @@ final class SnapshotTable(val root: String, val fullName: String) {
       // consumers (select on named columns) instead of processing 0 rows
       to.dataDirs.headOption match {
         case Some(d) =>
-          projectTo(spark.read.format(to.format).load(d),
+          projectTo(SnapshotTable.loadDir(spark, to.format, d),
             to.cols, dirColumnMapping(d, to.cols)).limit(0)
         case None => emptyWithSchema(spark, to) // table has never held data
       }
     else
       // each delta dir projected to the TO snapshot's schema, so the
       // changelog consumer sees one stable shape across evolution
-      delta.map(d => projectTo(spark.read.format(to.format).load(d),
+      delta.map(d => projectTo(SnapshotTable.loadDir(spark, to.format, d),
         to.cols, dirColumnMapping(d, to.cols))).reduce(_ unionByName _)
   }
 
@@ -1766,8 +1779,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
               else readDir(spark, prev, _)
             applicable.map(read).reduceOption(_ unionByName _)
               .map { rows =>
-                val keys = spark.read
-                  .format(del.format.getOrElse(prev.format)).load(del.dir)
+                val keys = SnapshotTable.loadDir(spark, del.format.getOrElse(prev.format), del.dir)
                 val erased = rows.join(broadcast(keys), del.keys, "left_semi")
                 val cleaned =
                   if (del.positional)
@@ -2057,8 +2069,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
         s"add_files to $fullName: unreadable parquet footer in $sourcePath/$rel")
     }
     val newRows = relRows.values.sum
-    val dataDir = Paths.get(root,
-      s"snap-${java.util.UUID.randomUUID().toString.take(8)}-added").toString
+    val dataDir = newDir(suffix = "-added")
     // any failure — a stats error, a schema-conformance reject at swap
     // time, conflict-retry exhaustion — cleans up the manifest dir: an
     // aborted import must not leave an orphaned snap-*-added dir for
@@ -2099,7 +2110,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
         else Map("" -> newRows)
       writePartitionSidecar(dataDir, partCols, rowsByPart1, newRows, format, perFileRows)
       try {
-        val df = spark.read.format(format).load(dataDir)
+        val df = SnapshotTable.loadDir(spark, format, dataDir)
         val fields = df.schema.fields.toSeq
         val aggs = graft.plans.RangeStats.rangeAggs(fields)
         val row = df.agg(aggs.head, aggs.tail: _*).collect().head
@@ -2110,7 +2121,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
           graft.plans.RangeStats.entriesFromMetrics(fields, metrics, partBounds))
       } catch { case scala.util.control.NonFatal(_) => () }
       val writeSchema: Seq[(String, String)] =
-        spark.read.format(format).load(dataDir)
+        SnapshotTable.loadDir(spark, format, dataDir)
           .schema.fields.toSeq.map(f => f.name -> f.dataType.sql)
       var expectedParent = currentSnapshot.map(_.id)
       var attempt = 0
@@ -2136,7 +2147,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
       throw new IllegalStateException("unreachable")
     } catch {
       case scala.util.control.NonFatal(e) =>
-        deleteRecursively(new File(dataDir))
+        SnapshotTable.deleteTree(new File(dataDir))
         throw e
     }
   }
@@ -2192,7 +2203,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
       val kept = all.filterNot(_.id == snapshotId)
       writeMetadata(kept)
       val liveDirs = kept.flatMap(_.dataDirs).toSet
-      snap.dataDirs.filterNot(liveDirs.contains).foreach(d => deleteRecursively(new File(d)))
+      snap.dataDirs.filterNot(liveDirs.contains).foreach(d => SnapshotTable.deleteTree(new File(d)))
       Audit.log("table_write", fullName, Map(
         "operation" -> "stage_discard", "snapshot_id" -> snapshotId.toString))
     }
@@ -2961,7 +2972,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
       writeMetadata(kept)
       expired.flatMap(s => s.dataDirs ++ s.deletes.map(_.dir))
         .distinct.filterNot(liveDirs.contains).foreach { d =>
-          deleteRecursively(new File(d))
+          SnapshotTable.deleteTree(new File(d))
         }
     }
     sweepOrphans(liveDirs, olderThanMs): Unit
@@ -2990,7 +3001,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
       .filter(f => f.isDirectory && f.getName.startsWith("snap-"))
       .filterNot(f => liveDirs.contains(f.getPath) || liveDirs.contains(f.getAbsolutePath))
       .filter(_.lastModified() < cutoff)
-    dead.foreach(deleteRecursively)
+    dead.foreach(SnapshotTable.deleteTree)
     dead.map(_.getPath).toSeq
   }
 
@@ -3080,8 +3091,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     })
     // unique dir per attempt: the final snapshot id is unknown until the
     // swap wins, and two optimistic writers must never share a path
-    val dataDir = Paths.get(root,
-      s"snap-${java.util.UUID.randomUUID().toString.take(8)}").toString
+    val dataDir = newDir()
     // cluster rows per the declared write.distribution-mode before a
     // partitioned write (default hash-by-partition-key: without it every
     // task writes a file into every partition directory — tasks x
@@ -3133,7 +3143,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
       if (!filesWritten) 0L
       else metrics.get("__rows") match {
         case Some(l: Long) => l
-        case _ => df.sparkSession.read.format(format).load(dataDir).count()
+        case _ => SnapshotTable.loadDir(df.sparkSession, format, dataDir).count()
       }
     // an EMPTY batch (zero rows — whether it wrote nothing at all or a
     // handful of 0-row part files, which some plans emit) commits
@@ -3215,7 +3225,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
         case Right(snap) =>
           // the file-less dir of an empty batch is not referenced by the
           // snapshot — remove it rather than leaving _SUCCESS litter
-          if (!wroteFiles) deleteRecursively(new File(dataDir))
+          if (!wroteFiles) SnapshotTable.deleteTree(new File(dataDir))
           Audit.log("table_write", fullName, Map(
             "operation" -> op, "snapshot_id" -> snap.id.toString,
             "attempts" -> (attempt + 1).toString))
@@ -3225,7 +3235,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
             // the data dir was written but will never be referenced by any
             // snapshot — delete it now, or every exhausted commit would
             // permanently orphan a snapshot-sized directory on disk
-            deleteRecursively(new File(dataDir))
+            SnapshotTable.deleteTree(new File(dataDir))
             throw CommitFailedException(fullName, attempt + 1, conflict)
           }
           Thread.sleep(SnapshotTable.backoffMs(attempt))
@@ -3576,7 +3586,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
           // read each — a one-time upgrade cost, under the table lock).
           val byName = derived.map(c => c.name -> c.id).toMap
           cur.dataDirs.filterNot(d => Files.exists(columnsSidecarPath(d))).foreach { d =>
-            val phys = spark.read.format(cur.format).load(d).schema.fields.toSeq
+            val phys = SnapshotTable.loadDir(spark, cur.format, d).schema.fields.toSeq
             writeColumnsSidecar(d, phys.flatMap(f =>
               byName.get(f.name).map(id => TableColumn(id, f.name, f.dataType.sql))))
           }
@@ -3668,7 +3678,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     if (partitionCols.isEmpty) (Map.empty, Map.empty)
     else {
       import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
-      val df = spark.read.format(format).load(dataDir)
+      val df = SnapshotTable.loadDir(spark, format, dataDir)
       val inferred = partitionCols.map(c => df.schema(c).dataType)
       val n = partitionCols.size
       // string-cast keys render partition values the way Spark renders
@@ -3969,10 +3979,6 @@ final class SnapshotTable(val root: String, val fullName: String) {
         summary = summary)
     }
 
-  private def deleteRecursively(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
-  }
 }
 
 object SnapshotTable {
@@ -4255,6 +4261,120 @@ object SnapshotTable {
   /** One lock object per table root (JVM-wide writer serialization). */
   private[graft] def commitLock(root: String): Object =
     commitLocks.getOrElseUpdate(new java.io.File(root).getAbsolutePath, new Object)
+
+  /** SQL settings that change the schema Spark infers for a data dir:
+    * Parquet/ORC footer conversion and partition-value typing.
+    */
+  private val InferenceConfs: Seq[String] = {
+    import org.apache.spark.sql.internal.SQLConf
+    Seq(SQLConf.PARTITION_COLUMN_TYPE_INFERENCE, SQLConf.LEGACY_PARQUET_NANOS_AS_LONG,
+      SQLConf.CASE_SENSITIVE, SQLConf.SESSION_LOCAL_TIMEZONE, SQLConf.TIMESTAMP_TYPE,
+      SQLConf.LEGACY_TIME_PARSER_POLICY, SQLConf.PARQUET_BINARY_AS_STRING,
+      SQLConf.PARQUET_INT96_AS_TIMESTAMP, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+      SQLConf.PARQUET_SCHEMA_MERGING_ENABLED, SQLConf.ORC_SCHEMA_MERGING_ENABLED).map(_.key)
+  }
+
+  /** Most data dirs whose schema [[dirSchemas]] holds at once. */
+  private val DirSchemaCap = 4096
+
+  /** The schema Spark inferred the first time each data dir was loaded,
+    * by absolute dir path, then by (format, values of
+    * [[InferenceConfs]]). Exact because data dirs are write-once (see
+    * the class doc). Least recently used dirs drop out past
+    * [[DirSchemaCap]]; [[deleteTree]] drops the dirs it deletes.
+    */
+  private val dirSchemas =
+    new java.util.LinkedHashMap[String, Map[(String, Seq[String]), StructType]](64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, Map[(String, Seq[String]), StructType]]): Boolean =
+        size() > DirSchemaCap
+    }
+
+  private def absPath(p: String): String = Paths.get(p).toAbsolutePath.normalize.toString
+
+  /** Test seam: forget every memoized schema, so the next load of each
+    * dir infers afresh.
+    */
+  private[sink] def forgetDirSchemas(): Unit = dirSchemas.synchronized(dirSchemas.clear())
+
+  /** Load engine-written data dirs. The first load of a dir infers its
+    * schema (for Parquet, one Spark job reading footers); later loads
+    * pass that schema to the reader and run no job. Dirs after the
+    * first must share its physical layout (the scan coalescer's
+    * groups) and read with its schema. Fails, naming the dir, when a
+    * dir no longer holds data files.
+    */
+  private[graft] def loadDir(spark: SparkSession, format: String, dirs: String*): DataFrame =
+    dirSchema(spark, format, dirs.head) match {
+      case Some(s) =>
+        val df = spark.read.format(format).schema(s).load(dirs: _*)
+        requireDataFiles(df)
+        df
+      case None =>
+        val df = spark.read.format(format).load(dirs.head)
+        rememberSchema(spark, format, dirs.head, df.schema)
+        if (dirs.size == 1) df else loadDir(spark, format, dirs: _*)
+    }
+
+  /** `files` of the data dir `dir`, read with `dir` as basePath and
+    * `dir`'s schema, so partition columns type as in a read of the dir.
+    */
+  private[graft] def loadDirFiles(
+      spark: SparkSession, format: String, dir: String, files: Seq[String]): DataFrame = {
+    val s = dirSchema(spark, format, dir).getOrElse(loadDir(spark, format, dir).schema)
+    spark.read.format(format).schema(s).option("basePath", dir).load(files: _*)
+  }
+
+  private def inferenceKey(spark: SparkSession, format: String): (String, Seq[String]) =
+    (format, InferenceConfs.map(k => spark.conf.getOption(k).orNull))
+
+  private def dirSchema(spark: SparkSession, format: String, dir: String): Option[StructType] = {
+    val key = inferenceKey(spark, format)
+    val path = absPath(dir)
+    dirSchemas.synchronized(Option(dirSchemas.get(path)).flatMap(_.get(key)))
+  }
+
+  private def rememberSchema(
+      spark: SparkSession, format: String, dir: String, schema: StructType): Unit = {
+    val key = inferenceKey(spark, format)
+    val path = absPath(dir)
+    dirSchemas.synchronized {
+      dirSchemas.put(path,
+        Option(dirSchemas.get(path)).getOrElse(Map.empty) + (key -> schema)): Unit
+    }
+  }
+
+  /** With a known schema Spark plans a dir whose files are gone as an
+    * empty scan; fail instead, naming the dir. A missing dir already
+    * fails in Spark with PATH_NOT_FOUND.
+    */
+  private def requireDataFiles(df: DataFrame): Unit = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    df.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }
+      .collectFirst { case r: HadoopFsRelation => r.location }
+      .foreach { loc =>
+        val files = loc.inputFiles
+        loc.rootPaths
+          .find(r => !files.exists(_.startsWith(r.toUri.toString.stripSuffix("/") + "/")))
+          .foreach(r => throw new java.io.FileNotFoundException(s"data dir ${r.toUri.getPath} " +
+            "holds no data files: it was deleted or emptied outside the engine"))
+      }
+  }
+
+  /** Delete `f` and everything under it, dropping the memoized schema
+    * of every data dir at or below it.
+    */
+  private[graft] def deleteTree(f: File): Unit = {
+    val path = absPath(f.getPath)
+    dirSchemas.synchronized {
+      dirSchemas.keySet.removeIf(k => k == path || k.startsWith(path + File.separator)): Unit
+    }
+    def rm(g: File): Unit = {
+      if (g.isDirectory) Option(g.listFiles()).getOrElse(Array.empty[File]).foreach(rm)
+      g.delete(): Unit
+    }
+    rm(f)
+  }
 
   /** Warehouse layout: `<warehouse>/<namespace>.<name>/`. */
   def apply(warehouse: String, namespace: String, name: String): SnapshotTable =

@@ -81,7 +81,8 @@ private[graft] final class KeyedCache(persistEntries: Boolean = true) {
     m.clear()
   }
 
-  // evicted entries may belong to an already-stopped SparkContext
+  // evicted entries may belong to an already-stopped SparkContext: a
+  // failed release is logged, never thrown into the caller's lookup
   private def safeUnpersist(df: DataFrame): Unit =
     try {
       df.unpersist(blocking = false)
@@ -96,10 +97,15 @@ private[graft] final class KeyedCache(persistEntries: Boolean = true) {
             lr.rdd.unpersist(blocking = false)
           case _ => ()
         }
-    } catch { case _: Throwable => () }
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        KeyedCache.log.warn("could not release an evicted cache entry", e)
+    }
 }
 
 private[graft] object KeyedCache {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[KeyedCache])
 
   /** Entry bound. Must EXCEED the largest working set one composed
     * operator builds before executing its final plan: evicting a
